@@ -25,8 +25,9 @@ bearing after an unclean restart of the at-least-once source:
    its own torn partitions are excluded, making re-execution
    bit-deterministic.
 3. **Replay-idempotent writes.** All three sinks (statuses, grown
-   index rows, bookkeeping marks) are epoch-partitioned dynamic
-   overwrites: a replayed epoch REPLACES itself.
+   index rows, bookkeeping marks) are epoch-partitioned: each epoch
+   overwrites only its own ``epoch=N`` partition, so a replayed epoch
+   REPLACES itself.
 
 The loop's end-to-end contract — committed per-epoch statuses equal a
 sequential fold of the batch operator over the committed epochs — is
@@ -128,13 +129,14 @@ def _commit_concurrently(sc, jobs) -> None:
 
 
 def _epoch_write(df: DataFrame, path: str, epoch_id: int) -> None:
-    (
-        df.withColumn("epoch", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(path)
-    )
+    # Overwrite the epoch's own directory, never the table root: every
+    # parquet write ends in CacheManager.recacheByPath(written path),
+    # which drops the buffers of each cached plan scanning a root that
+    # STARTS WITH that path. The screen's persisted frames scan these
+    # roots, so a root-level write would make the first sibling commit
+    # clear caches the others are still reading (recomputed from
+    # lineage). A ``…/epoch=N`` path is a prefix of no root; keep it so.
+    df.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
 
 
 def _listing_signature(paths) -> "tuple | None":
@@ -166,8 +168,9 @@ def _listing_signature(paths) -> "tuple | None":
 
 def _read_before(spark: SparkSession, path: str, epoch_id: int):
     """Partitions committed by epochs strictly before ``epoch_id`` —
-    None when the path doesn't exist yet (first epoch) or holds no
-    readable footer (only empty-epoch writes)."""
+    None when the path doesn't exist yet (first epoch). An empty
+    epoch's write leaves a schema-only file in its ``epoch=N``
+    directory, so it reads back as zero rows, not as None."""
     try:
         return spark.read.parquet(path).filter(F.col("epoch") < epoch_id)
     except AnalysisException:
@@ -381,9 +384,9 @@ def make_corpus_ingestion_screen(
         # contract re-writes ALL of them on a re-executed epoch, so
         # completion order is immaterial to recovery) — submit them as
         # concurrent Spark jobs instead of five sequential commit
-        # latencies, all reading the caches the count() above filled;
-        # _commit_concurrently carries the stream's job group into the
-        # pool threads and kills siblings on first failure (ADVICE r13)
+        # latencies; _commit_concurrently carries the stream's job
+        # group into the pool threads and kills siblings on first
+        # failure (ADVICE r13)
         jobs = [lambda: appender(out, epoch_id)]
         jobs += [
             lambda name=name: _epoch_write(
@@ -458,7 +461,7 @@ def compact_grown_index(
       sentinel -1 is below every live epoch, so the compacted rows
       stay visible to every future (and re-executed) epoch.
     - **Replay safety is the caller's epoch bound**: a replayed epoch
-      N re-WRITES partition ``epoch=N`` (dynamic overwrite). Folding
+      N re-WRITES partition ``epoch=N`` (overwrites that dir). Folding
       an epoch that can still replay would duplicate its rows, exactly
       the ``compact_epochs`` hazard — pass ``committed_through`` (the
       stream's last committed batch id from its checkpoint commit log);
@@ -511,8 +514,8 @@ def make_semantic_ingestion_screen(
     """``foreachBatch`` callable for the growing-corpus SEMANTIC dedup
     loop — the embedding twin of :func:`make_corpus_ingestion_screen`
     with the same three restart guarantees (per-queue replay marks,
-    epoch-consistent index reads, epoch-partitioned dynamic-overwrite
-    writes on every sink):
+    epoch-consistent index reads, per-epoch partition overwrites on
+    every sink):
 
         source -> screen each microbatch's vectors against the
         persisted semantic index (``incremental_semantic_dedup``) ->

@@ -8,7 +8,8 @@ guarantees stay pinned on every default pytest run:
 1. growth: a later epoch's exact copy of an earlier epoch's unique doc
    comes back exact_dup with match_id = the earlier doc;
 2. epoch re-execution: replaying an epoch (same epoch_id, same rows)
-   leaves every sink unchanged — dynamic-overwrite idempotence;
+   leaves every sink unchanged — each sink overwrites only its own
+   epoch=N partition;
 3. replay marks: broker-replayed rows (same queue, id at-or-below the
    committed mark) are dropped BEFORE the screen, so they can neither
    duplicate statuses nor flip their own status against the grown
@@ -139,6 +140,100 @@ def test_near_dup_against_grown_entry(loop):
     got = _statuses(dirs["status"])
     assert got[200][0] == "unique"
     assert got[201] == ("near_dup", 200, 1)
+
+
+def test_all_replay_epoch_then_normal_epoch(loop):
+    """An epoch whose rows are all broker replays reaches the sinks as
+    empty frames (the marks drop every row). Its writes leave
+    schema-only files in each ``epoch=N`` dir, which later epochs read
+    back as zero rows: the next normal epoch must still screen, grow and
+    mark exactly as if the empty epoch had never happened."""
+    spark, screen, dirs = loop
+    e0 = [("q1", 0, 600, _text(980)), ("q2", 0, 601, _text(981))]
+    screen(_batch(spark, e0), 0)
+    screen(_batch(spark, e0), 1)  # every row at-or-below its mark
+    assert len(_statuses(dirs["status"])) == 2
+
+    screen(
+        _batch(
+            spark,
+            [
+                ("q1", 1, 602, _text(980)),  # copy of epoch-0's 600
+                ("q2", 0, 601, _text(981)),  # replay, dropped
+                ("q2", 1, 603, _text(982)),
+            ],
+        ),
+        2,
+    )
+    got = _statuses(dirs["status"])
+    assert got[600] == ("unique", None, 0) and got[601] == ("unique", None, 0)
+    assert got[602] == ("exact_dup", 600, 2), "growth lost after empty epoch"
+    assert got[603][0] == "unique" and got[603][2] == 2
+    assert len(got) == 4
+
+    book = spark.read.parquet(dirs["book"])
+    assert book.filter("epoch = 1").count() == 0
+    marks = {
+        r[0]: r[1]
+        for r in book.groupBy("destination").agg({"max_id": "max"}).collect()
+    }
+    assert marks == {"q1": 1, "q2": 1}
+    hashes = spark.read.parquet(dirs["grown"] + "/hashes")
+    assert sorted(
+        (r.corp_id, r.epoch) for r in hashes.select("corp_id", "epoch").collect()
+    ) == [(600, 0), (601, 0), (603, 2)]
+
+
+def test_epoch_write_keeps_caches_over_its_root(spark, tmp_path):
+    """A sink commit must not clear cached frames that scan the table
+    it writes. Every parquet write ends in CacheManager.recacheByPath
+    (written path), which drops each cached plan scanning a root that
+    starts with that path; the screen's five concurrent commits write
+    the very roots its persisted frames read, so a root-level write
+    would make the first commit to finish recompute the others'
+    inputs. The UDF counts evaluations: a cache that survives the write
+    runs it only while being filled. Also pins the read-back: a
+    partition column ``epoch int`` and a rewrite that replaces an
+    epoch's rows."""
+    from pyspark.sql import functions as F
+
+    from solace_apache_beam_spark.streaming.ingestion import (
+        _epoch_write,
+        _read_before,
+    )
+
+    def rows(*vs):
+        return spark.createDataFrame([(v,) for v in vs], "v long")
+
+    table = str(tmp_path / "t")
+    _epoch_write(rows(0), table, 0)
+    _epoch_write(rows(10), table, 1)
+
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        evals.add(1)
+        return v
+
+    cached = (
+        _read_before(spark, table, 2)
+        .withColumn("v", F.udf(counted, "long")("v"))
+        .persist()
+    )
+    try:
+        assert cached.count() == 2 and evals.value == 2
+        _epoch_write(rows(20), table, 2)
+        assert cached.count() == 2
+        assert evals.value == 2, "the write recomputed a cache over its root"
+    finally:
+        cached.unpersist()
+
+    assert spark.read.parquet(table).schema["epoch"].simpleString() == "epoch:int"
+    _epoch_write(rows(11, 12), table, 1)
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(table).select("epoch", "v").collect()
+    )
+    assert got == [(0, 0), (1, 11), (1, 12), (2, 20)]
 
 
 if __name__ == "__main__":
