@@ -1585,8 +1585,9 @@ def incremental_dedup(
 
     Output: (doc_id, status, match_id, jaccard) — one row per new doc;
     match_id/jaccard are NULL for 'unique', jaccard NULL for
-    'exact_dup'. Shuffles: hash join + band join + verify join, each
-    keyed and AQE-promotable; zero driver collects.
+    'exact_dup'. Shuffles: band join + verify join, each keyed and
+    AQE-promotable; the hash join broadcasts the batch's hashes; zero
+    driver collects.
 
     Boundedness contract: the planner may broadcast BATCH-derived
     frames (hashes, bands, candidates) — an increment is bounded by the
@@ -1594,10 +1595,11 @@ def incremental_dedup(
     build a broadcast: the band-index, bucket-filter, and shingle-set
     joins are pinned sort-merge (their estimates come from aggregates /
     unmaterialized Arrow lineage — the misestimate class that OOM'd
-    ngram-Jaccard at a 10x stress run). The exact-hash join stays
-    statistics-driven: corp_hash is a projection of the corpus scan
-    with a realistic scan-proportional estimate, and the batch side is
-    the legitimate broadcast candidate."""
+    ngram-Jaccard at a 10x stress run). The exact-hash join is pinned
+    the other way: the batch's hashes are its broadcast side, so the
+    corpus hash table streams through it map-side and is never
+    shuffled, whether or not adaptive execution is on to pick that
+    broadcast at runtime (the ingestion screen plans statically)."""
     if (corpus_df is None) == (corpus_index is None):
         raise ValueError(
             "pass exactly one of corpus_df (recompute path) or "
@@ -1646,9 +1648,12 @@ def incremental_dedup(
             F.col(id_col).alias("corp_id"), F.col("hs").alias("sh_c")
         )
     # consumed twice (remaining-exclusion + final union): persist so the
-    # hash join runs once, not per consumer
+    # hash join runs once, not per consumer. Broadcast pinned to the
+    # batch side: planned statically from scan sizes, an index above the
+    # broadcast threshold would make this a sort-merge join shuffling
+    # the corpus's whole hash table every run
     exact = (
-        new_hash.join(corp_hash, "h")
+        F.broadcast(new_hash).join(corp_hash, "h")
         .groupBy("new_id")
         .agg(F.min("corp_id").alias("match_id"))
         .persist(StorageLevel.MEMORY_AND_DISK)

@@ -37,9 +37,14 @@ pinned by the soak-tier wrapper.
 At 100 TB: the base index is a bucketed table built once
 (``build_corpus_index``); per-epoch cost touches the batch plus the
 index's band partitions the batch joins (sort-merge, never a corpus
-broadcast — incremental_dedup's boundedness contract); the grown
-partitions compact downstream like any epoch-partitioned warehouse
-table. State outside the store: the high-water-mark table is one row
+broadcast — incremental_dedup's boundedness contract) and one
+map-side pass of the index's hash table through the batch's broadcast
+hashes (never a shuffle of it); the grown partitions compact
+downstream like any epoch-partitioned warehouse table. The MinHash
+screen's plans are planned statically, so an epoch costs one Spark job
+per sink write rather than one per adaptive query stage, and its
+reducer count (``shuffle_partitions``) follows the epoch size, not the
+corpus. State outside the store: the high-water-mark table is one row
 per (queue, epoch) — scalars, not data.
 """
 
@@ -56,29 +61,44 @@ except ImportError:  # pragma: no cover
 _INDEX_PARTS = ("hashes", "shingles", "bands")
 
 
-def _scoped_shuffle_partitions(batch_df: DataFrame, n: int | None, fn) -> None:
-    """Run ``fn()`` with ``spark.sql.shuffle.partitions`` set to ``n``
-    on the session that will actually EXECUTE the screen's plans, then
-    restore. That session is ``batch_df.sparkSession`` — under a real
-    stream, foreachBatch hands a frame bound to the stream execution's
-    CLONED session, and a conf set on the outer/builder session is
-    invisible to it (verified live on Spark 4.1.2; round-13 review
-    finding). Microbatches are driver-sequential, so the set/restore
-    cannot race another batch of the same stream; a concurrent foreign
-    query sharing the clone would see the override — dedicate a
-    session to the loop (the production posture anyway) if that
-    matters. ``n=None`` runs ``fn`` untouched."""
-    if n is None:
-        fn()
-        return
+def _scoped_conf(batch_df: DataFrame, settings: dict[str, str], fn) -> None:
+    """Run ``fn()`` with the SQL ``settings`` applied on the session
+    that will actually EXECUTE the screen's plans, then restore each
+    prior value — also when ``fn`` raises; a key that was unset is
+    unset again. That session is ``batch_df.sparkSession`` — under a
+    real stream, foreachBatch hands a frame bound to the stream
+    execution's CLONED session, and a conf set on the outer/builder
+    session is invisible to it (verified live on Spark 4.1.2; round-13
+    review finding). Microbatches are driver-sequential, so the
+    set/restore cannot race another batch of the same stream; a
+    concurrent foreign query sharing the clone would see the override —
+    dedicate a session to the loop (the production posture anyway) if
+    that matters.
+
+    The MinHash screen passes ``spark.sql.adaptive.enabled=false``:
+    adaptive execution submits every query stage of the five concurrent
+    sink writes as its own job and re-plans after each one (measured:
+    43 jobs over 97 stages per 10k-doc epoch; 11 jobs over 26 stages
+    planned statically). Static planning is safe
+    there because every join whose side size matters is pinned — the
+    corpus-derived sides merge, the batch-derived sides broadcast
+    (``incremental_dedup``'s boundedness contract) — or has batch-sized
+    data on both sides. What it gives up: post-shuffle partition
+    coalescing (the screen's ``shuffle_partitions`` sizes the reducers
+    instead) and skew-join splitting (band buckets are capped at
+    ``max_bucket`` corpus rows, so no join key is unboundedly hot)."""
     sess = batch_df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prev = sess.conf.get(key)
-    sess.conf.set(key, str(n))
+    prev = {key: sess.conf.get(key, None) for key in settings}
+    for key, value in settings.items():
+        sess.conf.set(key, value)
     try:
         fn()
     finally:
-        sess.conf.set(key, prev)
+        for key, value in prev.items():
+            if value is None:
+                sess.conf.unset(key)
+            else:
+                sess.conf.set(key, value)
 
 
 def _commit_concurrently(sc, jobs) -> None:
@@ -207,9 +227,13 @@ def make_corpus_ingestion_screen(
     bounded by the EPOCH size, not the corpus — a session-wide reducer
     count sized for corpus-scale queries buys pure task-scheduling
     overhead here (measured: 32 reducers on local[32] cost ~2 s/epoch
-    over 8 at 10k-doc epochs; round-13 curve in PLANS.md). Size it to
-    batch-bytes / target-partition-bytes in production; None leaves
-    the session setting untouched."""
+    over 8 at 10k-doc epochs; round-13 curve in PLANS.md). The screen
+    runs with adaptive execution off (``_scoped_conf``), so no runtime
+    coalescing trims that count: it is the exact reduce-task count of
+    every shuffle the screen makes, and the file count of each
+    post-shuffle sink per epoch. Size it to batch-bytes /
+    target-partition-bytes in production; None keeps the session's
+    count."""
     from pyspark.storagelevel import StorageLevel
 
     from solace_apache_beam_spark.llm.dedup import incremental_dedup
@@ -261,10 +285,13 @@ def make_corpus_ingestion_screen(
                 "sig": sig,
             }
 
+    # statically planned (_scoped_conf's docstring says why that is safe)
+    settings = {"spark.sql.adaptive.enabled": "false"}
+    if shuffle_partitions is not None:
+        settings["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+
     def screen(batch_df: DataFrame, epoch_id: int) -> None:
-        _scoped_shuffle_partitions(
-            batch_df, shuffle_partitions, lambda: _screen(batch_df, epoch_id)
-        )
+        _scoped_conf(batch_df, settings, lambda: _screen(batch_df, epoch_id))
 
     def _screen(batch_df: DataFrame, epoch_id: int) -> None:
         import os
@@ -338,7 +365,10 @@ def make_corpus_ingestion_screen(
         # immediately and drive the screen's computation themselves —
         # BlockManager per-block locks make racing consumers compute
         # each persisted block exactly once (the same coherence
-        # argument as ivf_pq_topk's overlapped training chains), so the
+        # argument as ivf_pq_topk's overlapped training chains; still
+        # true statically planned: in a traced 10k-doc epoch two
+        # overlapping stages over `rows` read the source once, and the
+        # kernel ran in one of the five stages over its frame), so the
         # heavy screen compute OVERLAPS the commit fan-out instead of
         # strictly preceding it, and the marks/hashes sinks (which
         # depend only on `rows`) back-fill executors while the dedup
@@ -561,17 +591,21 @@ def make_semantic_ingestion_screen(
                 "sig": sig,
             }
 
+    # scoped reducer-count override only (shared helper — applies to
+    # the clone session executing the batch). Cost-model note vs the
+    # MinHash twin: THIS screen's heavy stage is the post-shuffle
+    # bucket matmul, which is REDUCER-bound at production vector epochs
+    # (8 reducers measured 2x slower than 32 at 60k-vector epochs,
+    # round 13) — lower it only for small-batch deployments where
+    # commit latency dominates. It also stays ADAPTIVE, unlike the
+    # twin: AQE's runtime coalescing and skew splitting act on exactly
+    # that reducer-bound stage, and static planning is unmeasured here.
+    settings = {}
+    if shuffle_partitions is not None:
+        settings["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+
     def screen(batch_df: DataFrame, epoch_id: int) -> None:
-        # scoped reducer-count override (shared helper — applies to the
-        # clone session executing the batch). Cost-model note vs the
-        # MinHash twin: THIS screen's heavy stage is the post-shuffle
-        # bucket matmul, which is REDUCER-bound at production vector
-        # epochs (8 reducers measured 2x slower than 32 at 60k-vector
-        # epochs, round 13) — lower it only for small-batch
-        # deployments where commit latency dominates.
-        _scoped_shuffle_partitions(
-            batch_df, shuffle_partitions, lambda: _screen(batch_df, epoch_id)
-        )
+        _scoped_conf(batch_df, settings, lambda: _screen(batch_df, epoch_id))
 
     def _screen(batch_df: DataFrame, epoch_id: int) -> None:
         rows = batch_df.select(queue_col, id_col, doc_col, vec_col)

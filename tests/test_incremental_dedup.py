@@ -92,6 +92,102 @@ def test_materialized_corpus_index_matches_recompute(spark, tmp_path):
     assert any(r[1] == "near_dup" for r in got)  # non-trivial corpus hit
 
 
+def _marker_depth(line: str) -> int:
+    """Column of a tree-string line's ``+-``/``:-`` marker (-1: root)."""
+    import re
+
+    m = re.search(r"[+:]- ", line)
+    return m.start() if m else -1
+
+
+def _subtree(lines: list[str], i: int, prune: str | None = None) -> list[str]:
+    """Line ``i`` of a plan tree string and every line below it; lines
+    containing ``prune`` are kept but their children are skipped."""
+    depth = _marker_depth(lines[i])
+    out = [lines[i]]
+    skip_below = None
+    for line in lines[i + 1:]:
+        d = _marker_depth(line)
+        if d <= depth:
+            break
+        if skip_below is not None:
+            if d > skip_below:
+                continue
+            skip_below = None
+        out.append(line)
+        if prune is not None and prune in line:
+            skip_below = d
+    return out
+
+
+def test_exact_join_broadcasts_batch_side_when_planned_statically(
+    spark, sf_dir, tmp_path
+):
+    """Without adaptive execution the exact-hash join is planned from
+    scan sizes, and an index above the broadcast threshold would make it
+    a sort-merge join that shuffles the index's whole hash table every
+    run (the ingestion screen plans statically). The batch's hashes are
+    pinned as the broadcast side instead — and no index-derived frame
+    (hashes, bands, shingles: the scans carrying ``corp_id``) may ever
+    sit under a BroadcastExchange. A broadcast of a cached batch-side
+    frame (``touched`` reads the cached batch bands) is batch-bounded
+    even though the cached plan's lineage joins the index, so each
+    broadcast is checked down to the cached relations it reads; the
+    broadcasts inside those cached plans are checked on their own."""
+    from pyspark.sql import functions as F
+
+    from solace_apache_beam_spark.llm.dedup import (
+        build_corpus_index,
+        incremental_dedup,
+    )
+    from solace_apache_beam_spark.session import load_table
+
+    # a session of its own: the confs below never leak into other tests
+    static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    # below the smallest index part: nothing broadcasts on statistics
+    static.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    docs = load_table(static, sf_dir, "documents")
+    idx = build_corpus_index(docs.filter(F.col("doc_id") % 4 != 0))
+    stored = {}
+    for name, df in idx.items():
+        path = str(tmp_path / f"static_{name}")
+        df.write.mode("overwrite").parquet(path)
+        stored[name] = static.read.parquet(path)
+    idx.unpersist()
+
+    new = docs.filter(F.col("doc_id") % 4 == 0)
+    out = incremental_dedup(new, corpus_index=stored)
+    assert out.count() == new.count()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    out.plan_caches.unpersist()
+
+    lines = plan.splitlines()
+    assert "AdaptiveSparkPlan" not in plan
+    joins = [
+        i for i, line in enumerate(lines)
+        if "BroadcastHashJoin [h#" in line
+    ]
+    assert joins, f"exact-hash join is not a broadcast join:\n{plan}"
+    for i in joins:
+        sub = _subtree(lines, i)
+        child_depth = min(_marker_depth(line) for line in sub[1:])
+        builds = [
+            j for j, line in enumerate(sub)
+            if _marker_depth(line) == child_depth and "BroadcastExchange" in line
+        ]
+        assert len(builds) == 1
+        build = "\n".join(_subtree(sub, builds[0]))
+        assert "AS new_id" in build and "md5(" in build
+        assert "corp_id" not in build
+    # the index's hash table is scanned in place, never shuffled
+    assert "Exchange hashpartitioning(h#" not in plan
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" in line:
+            sub = "\n".join(_subtree(lines, i, prune="InMemoryRelation"))
+            assert "FileScan parquet [corp_id" not in sub, sub
+
+
 def test_batch_side_frames_match_build_corpus_index(spark):
     """ADVICE r13: the riskiest equivalence in the round-13 index-reuse
     change, asserted DIRECTLY (the ingestion-loop tests only exercise it

@@ -184,6 +184,61 @@ def test_all_replay_epoch_then_normal_epoch(loop):
     ) == [(600, 0), (601, 0), (603, 2)]
 
 
+def test_screen_restores_adaptive_execution(loop):
+    """The MinHash screen plans statically (adaptive execution off on
+    the batch's session for the callback's duration): after a screened
+    epoch, that session is adaptive again."""
+    spark, screen, dirs = loop
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    screen(_batch(spark, [("q1", 0, 700, _text(3)), ("q1", 1, 701, _text(990))]), 0)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    got = _statuses(dirs["status"])
+    assert got[700] == ("exact_dup", 3, 0) and got[701][0] == "unique"
+
+
+def test_scoped_conf_applies_and_restores(spark):
+    """``_scoped_conf`` sets each key on ``batch_df.sparkSession`` (a
+    stream hands foreachBatch a frame of its own cloned session, here a
+    ``newSession()``), leaves the outer session alone, and restores each
+    prior value after the callback, also when the callback raises; a
+    key that was unset is unset again."""
+    from solace_apache_beam_spark.streaming.ingestion import _scoped_conf
+
+    inner = spark.newSession()
+    inner.conf.set("spark.sql.adaptive.enabled", "true")
+    inner.conf.set("spark.sql.shuffle.partitions", "7")
+    outer_before = spark.conf.get("spark.sql.adaptive.enabled")
+    settings = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "3",
+        "solace.test.scoped": "on",
+    }
+    batch_df = inner.range(1)
+
+    def state(sess):
+        return tuple(sess.conf.get(k, None) for k in settings)
+
+    seen = {}
+
+    def fn():
+        seen["inner"] = state(inner)
+        seen["outer"] = spark.conf.get("spark.sql.adaptive.enabled")
+
+    _scoped_conf(batch_df, settings, fn)
+    assert seen["inner"] == ("false", "3", "on")
+    assert seen["outer"] == outer_before
+    assert state(inner) == ("true", "7", None)
+
+    def boom():
+        seen["raised"] = state(inner)
+        raise RuntimeError("screen failed")
+
+    with pytest.raises(RuntimeError, match="screen failed"):
+        _scoped_conf(batch_df, settings, boom)
+    assert seen["raised"] == ("false", "3", "on")
+    assert state(inner) == ("true", "7", None)
+
+
 def test_epoch_write_keeps_caches_over_its_root(spark, tmp_path):
     """A sink commit must not clear cached frames that scan the table
     it writes. Every parquet write ends in CacheManager.recacheByPath

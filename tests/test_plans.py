@@ -162,22 +162,35 @@ def _broadcast_hint_children(analyzed: str) -> list[str]:
     ]
 
 
-def _assert_only_touched_bucket_broadcast(analyzed: str) -> None:
-    """The ONE legitimate forced broadcast in incremental_dedup is the
-    touched-bucket prefilter (ADVICE r13): `touched` is batch-bounded
-    by design (<= n_bands rows per surviving batch doc), and pinning it
-    guarantees the map-side corpus filter while removing the risk of
-    the corpus-derived side winning a misestimated broadcast. Its
-    analyzed shape is a Deduplicate over exactly (band, band_hash).
+def _assert_only_batch_side_broadcasts(analyzed: str) -> None:
+    """incremental_dedup forces exactly two broadcasts, both of
+    batch-bounded sides:
+
+    - the touched-bucket prefilter (ADVICE r13): `touched` is <= n_bands
+      rows per surviving batch doc, and pinning it guarantees the
+      map-side corpus filter while removing the risk of the
+      corpus-derived side winning a misestimated broadcast. Its analyzed
+      shape is a Deduplicate over exactly (band, band_hash);
+    - the batch's content hashes in the exact-hash join, so the corpus
+      hash table is never shuffled when the plan is built statically.
+      Its analyzed shape is the (new_id, md5) projection.
+
     Every OTHER broadcast stays forbidden: corpus-derived sides (band
     index, bucket filter, shingle sets) must remain spillable."""
     import re
 
+    shapes = {
+        "touched": r"Deduplicate \[band#\d+, band_hash#\d+L?\]",
+        "batch hashes": r"Project \[\w+#\d+L? AS new_id#\d+L?, md5\(",
+    }
     children = _broadcast_hint_children(analyzed)
-    assert children, "the touched-bucket broadcast pin is missing"
+    for name, shape in shapes.items():
+        assert any(re.search(shape, c) for c in children), (
+            f"the {name} broadcast pin is missing"
+        )
     for child in children:
-        assert re.search(
-            r"Deduplicate \[band#\d+, band_hash#\d+L?\]", child
+        assert any(
+            re.search(shape, child) for shape in shapes.values()
         ), f"forced broadcast of a non-batch-bounded side: {child!r}"
     # belt and braces: the hint-shaped count matches the raw-string
     # count, so no broadcast slips through in another spelling
@@ -186,18 +199,19 @@ def _assert_only_touched_bucket_broadcast(analyzed: str) -> None:
 
 def test_incremental_dedup_no_forced_broadcast(spark, sf_dir, queries):
     """No broadcast may be FORCED except the batch-bounded
-    touched-bucket prefilter side, and the corpus-derived sides (band
-    index, bucket filter, shingle sets) must be pinned spillable — the
-    only other hints allowed are merge hints (round 3: the boundedness
-    contract is enforced, not just documented). Statistics-driven
-    broadcasts of BATCH-derived frames remain legitimate."""
+    touched-bucket prefilter and batch-hash sides, and the
+    corpus-derived sides (band index, bucket filter, shingle sets) must
+    be pinned spillable — the only other hints allowed are merge hints
+    (round 3: the boundedness contract is enforced, not just
+    documented). Statistics-driven broadcasts of BATCH-derived frames
+    remain legitimate."""
     analyzed = (
         queries["incremental_dedup"](spark, sf_dir)
         ._jdf.queryExecution()
         .analyzed()
         .toString()
     )
-    _assert_only_touched_bucket_broadcast(analyzed)
+    _assert_only_batch_side_broadcasts(analyzed)
     assert "strategy=merge" in analyzed  # corpus sides pinned
 
 
@@ -222,7 +236,7 @@ def test_incremental_index_path_keeps_boundedness_contract(spark, sf_dir):
         docs.filter(F.col("doc_id") % 4 == 0), corpus_index=idx
     )
     analyzed = out._jdf.queryExecution().analyzed().toString()
-    _assert_only_touched_bucket_broadcast(analyzed)
+    _assert_only_batch_side_broadcasts(analyzed)
     assert "strategy=merge" in analyzed
 
 
