@@ -26,10 +26,61 @@ import os as _os
 
 # Python workers (custom DataSource / UDF deserialization) import this
 # package by name; make sure the repo root is on PYTHONPATH before any
-# SparkSession (and its JVM) is created.
+# SparkSession (and its JVM) is created. That import also stat-guards
+# the workers' per-task zip-import invalidation (_guard_zip_invalidation).
 _repo_root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
 _pp = _os.environ.get("PYTHONPATH", "")
 if _repo_root not in _pp.split(_os.pathsep):
     _os.environ["PYTHONPATH"] = f"{_repo_root}{_os.pathsep}{_pp}" if _pp else _repo_root
+
+
+def _guard_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when the archive changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``pyspark.worker_util.setup_spark_files``). Before
+    Python 3.13 that makes every cached ``zipimporter`` re-parse its
+    archive's whole directory in pure Python. A worker's path holds the
+    Spark core jar (~5,400 entries) and ``pyspark.zip`` (~1,300) through
+    some sixteen importers, so each task paid 225-413 ms of CPU before
+    running anything. The guarded method stamps each importer with its
+    archive's ``(st_ino, st_size, st_mtime_ns)`` when it reads the
+    directory and skips the read while the stamp still matches, so an
+    archive rewritten in place or replaced is still re-read; when the
+    stat fails it defers to the original method. It is installed only
+    inside a task's Python worker, so the driver's import machinery is
+    untouched, and only before 3.13, where the invalidation is lazy.
+    Installing twice is a no-op.
+    """
+    import sys
+    import zipimport
+
+    from pyspark import TaskContext
+
+    original = zipimport.zipimporter.invalidate_caches
+    if (
+        sys.version_info >= (3, 13)
+        or TaskContext.get() is None
+        or getattr(original, "_stat_guarded", False)
+    ):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = _os.stat(self.archive)
+        except OSError:
+            self._read_stamp = None
+            return original(self)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        if getattr(self, "_read_stamp", None) != stamp:
+            original(self)
+            self._read_stamp = stamp
+
+    invalidate_caches._stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_guard_zip_invalidation()
 
 from solace_apache_beam_spark.session import get_spark  # noqa: F401,E402

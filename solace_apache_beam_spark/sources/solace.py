@@ -367,8 +367,6 @@ def register(spark) -> None:
     import this package: ship the package zip to the running session
     (works even when the JVM env was captured before our PYTHONPATH
     export in __init__)."""
-    import zipfile
-
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     repo_root = os.path.dirname(pkg_dir)
     zip_path = os.path.join(repo_root, ".solace_pkg.zip")
@@ -382,8 +380,28 @@ def register(spark) -> None:
         os.path.getmtime(f) > os.path.getmtime(zip_path) for f in sources
     )
     if stale:
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for full in sources:
-                zf.write(full, os.path.relpath(full, repo_root))
+        _write_zip_atomically(zip_path, sources, repo_root)
     spark.sparkContext.addPyFile(zip_path)
     spark.dataSource.register(SolaceDataSource)
+
+
+def _write_zip_atomically(zip_path: str, sources: list[str], root: str) -> None:
+    """Zip ``sources`` (named relative to ``root``) into ``zip_path``.
+    Concurrent sessions rebuild the same zip, so write a unique temp file
+    beside it and rename it into place: a reader sees the old zip or the
+    new one, never a torn or interleaved one."""
+    import tempfile
+    import zipfile
+
+    fd, tmp = tempfile.mkstemp(
+        prefix=".solace_pkg.", suffix=".tmp", dir=os.path.dirname(zip_path)
+    )
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for full in sources:
+                zf.write(full, os.path.relpath(full, root))
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide it from other users
+        os.replace(tmp, zip_path)
+    except BaseException:
+        os.unlink(tmp)
+        raise

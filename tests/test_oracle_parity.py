@@ -12,11 +12,12 @@ cheap rows-only/entry smokes and the default suite stops paying ~45 s
 for a fourth copy of the fixed-corpus comparison on every inner-loop
 run.
 
-Quick tier keeps an ALWAYS-ON rotating parity smoke (ADVICE r9: a
-bare `pytest tests/` must not silently lose the primary correctness
-gate): a deterministic day-keyed window of _SMOKE_N queries runs the
-real compare unconditionally, cycling through the whole registry every
-~9 days of calendar time while costing ~1/9 of the full sweep."""
+Quick tier keeps an ALWAYS-ON parity smoke (ADVICE r9: a bare
+`pytest tests/` must not silently lose the primary correctness gate):
+a pinned window of _SMOKE_N queries, one test per query, whose ids are
+the same on every day, plus one test that compares a day-keyed window
+cycling through the whole registry every ~11 days of calendar time.
+Each costs ~1/10 of the full sweep."""
 
 from __future__ import annotations
 
@@ -33,6 +34,17 @@ ORACLES = all_oracles()
 
 _ALL = sorted(ORACLES)
 _SMOKE_N = 8
+
+
+def _window(off: int) -> list[str]:
+    return [_ALL[(off + i) % len(_ALL)] for i in range(min(_SMOKE_N, len(_ALL)))]
+
+
+# Pinned window, anchored by name so that adding a query elsewhere in the
+# registry does not rename its tests. A day-keyed parametrization renamed
+# all _SMOKE_N test ids at every midnight, so two runs of the suite on
+# different days could not be compared test by test.
+SMOKE = _window(_ALL.index("dedup_minhash_rescue")) if _ALL else []
 # day-keyed deterministic rotation: stable within a day (reruns compare
 # the same subset), advances by a full window per day so the cycle
 # covers every query in ceil(len/_SMOKE_N) days. The key is overridable
@@ -41,8 +53,9 @@ _SMOKE_N = 8
 # SPARK_GRAFT_SMOKE_OFFSET=<int> to pin the window.
 _env_off = os.environ.get("SPARK_GRAFT_SMOKE_OFFSET")
 _KEY = int(_env_off) if _env_off is not None else date.today().toordinal()
-_OFF = (_KEY * _SMOKE_N) % max(1, len(_ALL))
-SMOKE = [_ALL[(_OFF + i) % len(_ALL)] for i in range(min(_SMOKE_N, len(_ALL)))]
+ROTATING = [
+    n for n in _window((_KEY * _SMOKE_N) % max(1, len(_ALL))) if n not in SMOKE
+]
 
 full_tier = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_FUZZ_FULL") != "1",
@@ -64,28 +77,42 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
     compare(df, con, ORACLES[name])
 
 
-@pytest.mark.skipif(
+_quick_tier = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_FUZZ_FULL") == "1",
-    reason="full tier runs the complete sweep above — the rotating "
-    "subset is the QUICK tier's gate and would be a strict re-run here "
+    reason="full tier runs the complete sweep above — the smoke "
+    "subsets are the QUICK tier's gate and would be a strict re-run here "
     "(suite-runtime cap, r11)",
 )
+
+
+@_quick_tier
 @pytest.mark.parametrize("name", SMOKE)
 def test_query_matches_oracle_smoke(name, spark, sf_dir, con):
-    """Always-on rotating subset of the parity sweep — the quick tier's
-    unconditional correctness gate (ADVICE r9). The subset is keyed on
-    the calendar day unless SPARK_GRAFT_SMOKE_OFFSET pins it (ADVICE
-    r10) — a failure that appears/disappears across reruns without a
-    code change means the day rolled; pin the offset to bisect."""
+    """Always-on pinned subset of the parity sweep — the quick tier's
+    unconditional correctness gate (ADVICE r9)."""
     df = QUERIES[name](spark, sf_dir)
-    try:
-        compare(df, con, ORACLES[name])
-    except AssertionError as exc:
-        raise AssertionError(
-            f"{exc}\n[smoke subset key={_KEY} — day-keyed unless "
-            "SPARK_GRAFT_SMOKE_OFFSET is set; pin it to reproduce "
-            "across midnight]"
-        ) from exc
+    compare(df, con, ORACLES[name])
+
+
+@_quick_tier
+def test_query_matches_oracle_rotating(spark, sf_dir, con):
+    """Always-on rotating subset of the parity sweep, under one stable
+    test id. The subset is keyed on the calendar day unless
+    SPARK_GRAFT_SMOKE_OFFSET pins it (ADVICE r10) — a failure that
+    appears/disappears across reruns without a code change means the
+    day rolled; pin the offset to bisect."""
+    failed = {}
+    for name in ROTATING:
+        try:
+            compare(QUERIES[name](spark, sf_dir), con, ORACLES[name])
+        except AssertionError as exc:
+            failed[name] = str(exc)
+    assert not failed, (
+        "\n".join(f"{n}: {e}" for n, e in failed.items())
+        + f"\n[rotating subset key={_KEY} — day-keyed unless "
+        "SPARK_GRAFT_SMOKE_OFFSET is set; pin it to reproduce across "
+        "midnight]"
+    )
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
