@@ -198,49 +198,22 @@ def drain_phase(work: str, k: int, max_per_batch: int) -> None:
         json.dump({"elapsed": round(elapsed, 2), "state_rows_peak": peak_state}, f)
 
 
-def stateful_drain_phase(
-    work: str, k: int, max_per_batch: int, engine: str = "v1"
-) -> None:
+def stateful_drain_phase(work: str, k: int, max_per_batch: int) -> None:
     """Child process for the STATEFUL soak (VERDICT r8 Next #6): the
     graph carries applyInPandasWithState (running_counts — lifetime
     per-key count+bytes) between the source and the idempotent
     appender, so the SIGKILL lands on live state-store versions, not
-    just source offsets. Same drain/flush discipline as drain_phase.
-    ``engine='v2'`` runs ``running_counts_tws`` (typed ValueState +
-    native MapState marks on RocksDB) under the identical broker-log
-    ground-truth contract."""
+    just source offsets. Same drain/flush discipline as drain_phase."""
     import uuid
 
     from solace_apache_beam_spark.session import get_spark
     from solace_apache_beam_spark.sinks.warehouse import make_idempotent_appender
     from solace_apache_beam_spark.streaming.pipelines import open_stream
+    from solace_apache_beam_spark.streaming.stateful import running_counts
 
     queues = [f"q{i}" for i in range(1, k + 1)]
     broker_dir = os.path.join(work, "broker")
     spark = get_spark("soak_stateful_phase")
-    if engine == "v2":
-        from solace_apache_beam_spark.streaming.stateful_v2 import (
-            ROCKSDB_PROVIDER,
-            running_counts_tws,
-        )
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-
-        def _counts(st):
-            # the v2 marks are a (queue, id) MapState; with the key
-            # being the queue itself the map holds one entry — same
-            # replay algebra as v1's single-long hwm
-            return running_counts_tws(
-                st, dedupe_by=("destination", "message_id")
-            )
-    else:
-        from solace_apache_beam_spark.streaming.stateful import running_counts
-
-        def _counts(st):
-            return running_counts(st, dedupe_by="message_id")
-
     stream = open_stream(
         spark, broker_dir, queues, max_records_per_batch=max_per_batch
     )
@@ -250,7 +223,7 @@ def stateful_drain_phase(
         # messages — S4/S6), so raw counting overcounts by exactly the
         # redelivered batch; the hwm state skips redeliveries (the
         # 500k soak found this — see running_counts' docstring)
-        _counts(stream)
+        running_counts(stream, dedupe_by="message_id")
         .writeStream.outputMode("update")
         .foreachBatch(make_idempotent_appender(os.path.join(work, "sink")))
         .option("checkpointLocation", os.path.join(work, "cp"))
@@ -283,7 +256,7 @@ def stateful_drain_phase(
         json.dump({"elapsed": round(elapsed, 2), "state_rows_peak": peak_state}, f)
 
 
-def stateful_kill_restart_soak(n: int, k: int, engine: str = "v1") -> None:
+def stateful_kill_restart_soak(n: int, k: int) -> None:
     """Kill-restart soak THROUGH the stateful operator. The evidence is
     stronger than delivery conservation alone: the final per-key
     lifetime totals must EXACTLY equal the broker log's ground truth
@@ -310,7 +283,6 @@ def stateful_kill_restart_soak(n: int, k: int, engine: str = "v1") -> None:
                 work,
                 str(k),
                 str(max_per_batch),
-                engine,
             ],
             start_new_session=True,
             stdout=subprocess.DEVNULL,
@@ -380,8 +352,7 @@ def stateful_kill_restart_soak(n: int, k: int, engine: str = "v1") -> None:
     got = {r[0]: (r[1], r[2]) for r in rows}
     acked = sum(fake_broker.acked_count(broker, q) for q in queues)
     out = {
-        "mode": "stateful" if engine == "v1" else f"stateful_{engine}",
-        "engine": engine,
+        "mode": "stateful",
         "messages": per_q * k,
         "queues": k,
         "epochs_at_kill": epochs_at_kill,
@@ -389,6 +360,7 @@ def stateful_kill_restart_soak(n: int, k: int, engine: str = "v1") -> None:
         "acked": acked,
         "total_s": round(total_s, 2),
         "msg_per_s": round(per_q * k / total_s),
+        "state_rows_peak": _done_state_rows(work),
     }
     assert got == expected, f"state diverged: got={got} expected={expected}"
     for q in queues:
@@ -448,49 +420,27 @@ def _done_state_rows(work: str):
         return None
 
 
-def sessionize_drain_phase(
-    work: str, k: int, max_per_batch: int, engine: str = "v1"
-) -> None:
+def sessionize_drain_phase(work: str, k: int, max_per_batch: int) -> None:
     """Child process for the SESSIONIZE soak (round 10): the graph
     carries the EventTimeTimeout sessionizer with the per-(key,queue)
     hwm map, at the nonzero watermark delay where broker replay
     actually reaches live state (see sessionize's docstring). Closed
-    sessions flow append-mode to the idempotent sink.
-
-    ``engine='v2'`` (round 12) runs ``sessionize_tws`` instead — the
-    transformWithState twin on event-time timers + RocksDB + the
-    protobuf state server (vendor/pbshim in this container) — under
-    the IDENTICAL kill-restart contract: session-level exactness
-    through a SIGKILL is the one claim the in-test graceful restarts
-    cannot make."""
+    sessions flow append-mode to the idempotent sink."""
     import uuid
 
     from solace_apache_beam_spark.session import get_spark
     from solace_apache_beam_spark.sinks.warehouse import make_idempotent_appender
     from solace_apache_beam_spark.streaming.pipelines import open_stream
-
-    if engine == "v2":
-        from solace_apache_beam_spark.streaming.stateful_v2 import (
-            ROCKSDB_PROVIDER,
-            sessionize_tws as _sessionize,
-        )
-    else:
-        from solace_apache_beam_spark.streaming.stateful import (
-            sessionize as _sessionize,
-        )
+    from solace_apache_beam_spark.streaming.stateful import sessionize
 
     queues = [f"q{i}" for i in range(1, k + 1)]
     broker_dir = os.path.join(work, "broker")
     spark = get_spark("soak_sessionize_phase")
-    if engine == "v2":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
     stream = open_stream(
         spark, broker_dir, queues, max_records_per_batch=max_per_batch
     )
     q = (
-        _sessionize(
+        sessionize(
             stream,
             gap_seconds=30,
             watermark="120 seconds",
@@ -540,9 +490,7 @@ def sessionize_drain_phase(
         json.dump({"elapsed": round(elapsed, 2), "state_rows_peak": peak_state}, f)
 
 
-def sessionize_kill_restart_soak(
-    n: int, k: int, skew: int = 1, engine: str = "v1"
-) -> None:
+def sessionize_kill_restart_soak(n: int, k: int, skew: int = 1) -> None:
     """Kill-restart soak THROUGH the hwm sessionizer. The evidence is
     session-level exactness: every queue's closed sessions must EXACTLY
     match the arithmetic session partition of its published stream —
@@ -582,7 +530,6 @@ def sessionize_kill_restart_soak(
                 work,
                 str(k),
                 str(max_per_batch),
-                engine,
             ],
             start_new_session=True,
             stdout=subprocess.DEVNULL,
@@ -646,8 +593,7 @@ def sessionize_kill_restart_soak(
     dupes = [r for r in rows if r[4] > 1]
     acked = sum(fake_broker.acked_count(broker, qq) for qq in queues)
     out = {
-        "mode": "sessionize" if engine == "v1" else f"sessionize_{engine}",
-        "engine": engine,
+        "mode": "sessionize",
         "messages": sum(counts),
         "queues": k,
         "skew": skew,
@@ -744,16 +690,11 @@ def _publish_funnel_skew(
         )
 
 
-def funnel_drain_phase(
-    work: str, k: int, max_per_batch: int, engine: str = "v1"
-) -> None:
+def funnel_drain_phase(work: str, k: int, max_per_batch: int) -> None:
     """Child process for the FUNNEL soak (round 10): the per-user stage
     machine with the per-(key,queue) hwm map sits between the source
     and the idempotent sink, so the SIGKILL lands on live funnel state
-    across ~10k users. ``engine='v2'`` (round 12) runs
-    ``funnel_progress_tws`` — typed ValueState + native MapState on
-    RocksDB through the protobuf state server — under the identical
-    per-user-exact kill-restart contract."""
+    across ~10k users."""
     import uuid
 
     from pyspark.sql import functions as F
@@ -761,24 +702,11 @@ def funnel_drain_phase(
     from solace_apache_beam_spark.session import get_spark
     from solace_apache_beam_spark.sinks.warehouse import make_idempotent_appender
     from solace_apache_beam_spark.streaming.pipelines import open_stream
-
-    if engine == "v2":
-        from solace_apache_beam_spark.streaming.stateful_v2 import (
-            ROCKSDB_PROVIDER,
-            funnel_progress_tws as _funnel,
-        )
-    else:
-        from solace_apache_beam_spark.streaming.stateful import (
-            funnel_progress as _funnel,
-        )
+    from solace_apache_beam_spark.streaming.stateful import funnel_progress
 
     queues = [f"q{i}" for i in range(1, k + 1)]
     broker_dir = os.path.join(work, "broker")
     spark = get_spark("soak_funnel_phase")
-    if engine == "v2":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
     stream = open_stream(
         spark, broker_dir, queues, max_records_per_batch=max_per_batch
     ).select(
@@ -789,7 +717,7 @@ def funnel_drain_phase(
         "destination",
     )
     q = (
-        _funnel(
+        funnel_progress(
             stream,
             _FUNNEL_STAGES,
             key_col="user",
@@ -827,9 +755,7 @@ def funnel_drain_phase(
         json.dump({"elapsed": round(elapsed, 2), "state_rows_peak": peak_state}, f)
 
 
-def funnel_kill_restart_soak(
-    n: int, k: int, skew: int = 1, engine: str = "v1"
-) -> None:
+def funnel_kill_restart_soak(n: int, k: int, skew: int = 1) -> None:
     """Kill-restart soak THROUGH the funnel stage machine. Ground truth
     is per-user exact: user parity picks the event-type pattern, so
     every odd user must finish at stage 3 and every even user at stage
@@ -878,7 +804,6 @@ def funnel_kill_restart_soak(
                 work,
                 str(k),
                 str(max_per_batch),
-                engine,
             ],
             start_new_session=True,
             stdout=subprocess.DEVNULL,
@@ -959,8 +884,7 @@ def funnel_kill_restart_soak(
         if got.get(u) != expected[u]
     }
     out = {
-        "mode": "funnel" if engine == "v1" else f"funnel_{engine}",
-        "engine": engine,
+        "mode": "funnel",
         "messages": per_q * k,
         "queues": k,
         "users": len(expected),
@@ -2391,28 +2315,19 @@ def main() -> None:
     if "--phase-stateful" in sys.argv:
         i = sys.argv.index("--phase-stateful")
         stateful_drain_phase(
-            sys.argv[i + 1],
-            int(sys.argv[i + 2]),
-            int(sys.argv[i + 3]),
-            sys.argv[i + 4] if len(sys.argv) > i + 4 else "v1",
+            sys.argv[i + 1], int(sys.argv[i + 2]), int(sys.argv[i + 3])
         )
         return
     if "--phase-sessionize" in sys.argv:
         i = sys.argv.index("--phase-sessionize")
         sessionize_drain_phase(
-            sys.argv[i + 1],
-            int(sys.argv[i + 2]),
-            int(sys.argv[i + 3]),
-            sys.argv[i + 4] if len(sys.argv) > i + 4 else "v1",
+            sys.argv[i + 1], int(sys.argv[i + 2]), int(sys.argv[i + 3])
         )
         return
     if "--phase-funnel" in sys.argv:
         i = sys.argv.index("--phase-funnel")
         funnel_drain_phase(
-            sys.argv[i + 1],
-            int(sys.argv[i + 2]),
-            int(sys.argv[i + 3]),
-            sys.argv[i + 4] if len(sys.argv) > i + 4 else "v1",
+            sys.argv[i + 1], int(sys.argv[i + 2]), int(sys.argv[i + 3])
         )
         return
     if "--phase-incdedup" in sys.argv:
@@ -2464,16 +2379,10 @@ def main() -> None:
     if "--semdedup-throughput" in sys.argv:
         semgrow_throughput_soak(n, k, batch_per_q)
         return
-    if "--stateful-v2" in sys.argv:
-        stateful_kill_restart_soak(n, k, engine="v2")
-    elif "--stateful" in sys.argv:
+    if "--stateful" in sys.argv:
         stateful_kill_restart_soak(n, k)
-    elif "--sessionize-v2" in sys.argv:
-        sessionize_kill_restart_soak(n, k, skew, engine="v2")
     elif "--sessionize" in sys.argv:
         sessionize_kill_restart_soak(n, k, skew)
-    elif "--funnel-v2" in sys.argv:
-        funnel_kill_restart_soak(n, k, skew, engine="v2")
     elif "--funnel" in sys.argv:
         funnel_kill_restart_soak(n, k, skew)
     elif "--incdedup-grow" in sys.argv:

@@ -44,14 +44,14 @@ def _guard_zip_invalidation() -> None:
     archive's whole directory in pure Python. A worker's path holds the
     Spark core jar (~5,400 entries) and ``pyspark.zip`` (~1,300) through
     some sixteen importers, so each task paid 225-413 ms of CPU before
-    running anything. The guarded method stamps each importer with its
-    archive's ``(st_ino, st_size, st_mtime_ns)`` when it reads the
-    directory and skips the read while the stamp still matches, so an
-    archive rewritten in place or replaced is still re-read; when the
-    stat fails it defers to the original method. It is installed only
-    inside a task's Python worker, so the driver's import machinery is
-    untouched, and only before 3.13, where the invalidation is lazy.
-    Installing twice is a no-op.
+    running anything. The guarded method stamps each archive path with
+    its ``(st_ino, st_size, st_mtime_ns)`` when it reads the directory;
+    while the stamp matches, every importer on that archive takes the
+    shared ``_zip_directory_cache`` entry, and an archive rewritten in
+    place or replaced is re-read; when the stat fails it defers to the
+    original method. It is installed only inside a task's Python worker,
+    so the driver's import machinery is untouched, and only before 3.13,
+    where the invalidation is lazy. Installing twice is a no-op.
     """
     import sys
     import zipimport
@@ -66,16 +66,21 @@ def _guard_zip_invalidation() -> None:
     ):
         return
 
+    read_stamps = {}  # archive -> stamp its _zip_directory_cache entry was read at
+
     def invalidate_caches(self):
         try:
             st = _os.stat(self.archive)
         except OSError:
-            self._read_stamp = None
+            read_stamps.pop(self.archive, None)
             return original(self)
         stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
-        if getattr(self, "_read_stamp", None) != stamp:
+        cached = zipimport._zip_directory_cache.get(self.archive)
+        if cached is not None and read_stamps.get(self.archive) == stamp:
+            self._files = cached
+        else:
             original(self)
-            self._read_stamp = stamp
+            read_stamps[self.archive] = stamp
 
     invalidate_caches._stat_guarded = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches

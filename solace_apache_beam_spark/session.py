@@ -25,13 +25,6 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
-    # the transformWithState engine path needs google.protobuf in BOTH
-    # the driver and the python workers; activate the pure-python wire
-    # shim (no-op when the real wheel is installed) before the JVM
-    # launches so workers inherit the PYTHONPATH entry
-    from solace_apache_beam_spark.vendor.pbshim import enable_protobuf_shim
-
-    enable_protobuf_shim()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

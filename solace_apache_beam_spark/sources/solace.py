@@ -368,21 +368,37 @@ def register(spark) -> None:
     (works even when the JVM env was captured before our PYTHONPATH
     export in __init__)."""
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    repo_root = os.path.dirname(pkg_dir)
-    zip_path = os.path.join(repo_root, ".solace_pkg.zip")
+    zip_path = os.path.join(os.path.dirname(pkg_dir), ".solace_pkg.zip")
+    _refresh_pkg_zip(pkg_dir, zip_path)
+    spark.sparkContext.addPyFile(zip_path)
+    spark.dataSource.register(SolaceDataSource)
+
+
+def _refresh_pkg_zip(pkg_dir: str, zip_path: str) -> bool:
+    """Rebuild ``zip_path`` from the ``.py`` files under ``pkg_dir``
+    (named relative to its parent) when it is stale: missing, older than
+    some source, or holding another set of modules than the tree (a
+    deleted module is newer than nothing, yet must stop shipping).
+    Return True iff it was rebuilt."""
+    import zipfile
+
+    root = os.path.dirname(pkg_dir)
     sources = [
         os.path.join(base, fn)
         for base, _dirs, files in os.walk(pkg_dir)
         for fn in files
         if fn.endswith(".py")
     ]
-    stale = not os.path.exists(zip_path) or any(
-        os.path.getmtime(f) > os.path.getmtime(zip_path) for f in sources
-    )
-    if stale:
-        _write_zip_atomically(zip_path, sources, repo_root)
-    spark.sparkContext.addPyFile(zip_path)
-    spark.dataSource.register(SolaceDataSource)
+    if os.path.exists(zip_path):
+        with zipfile.ZipFile(zip_path) as zf:
+            names = set(zf.namelist())
+        zip_mtime = os.path.getmtime(zip_path)
+        if names == {os.path.relpath(f, root) for f in sources} and all(
+            os.path.getmtime(f) <= zip_mtime for f in sources
+        ):
+            return False
+    _write_zip_atomically(zip_path, sources, root)
+    return True
 
 
 def _write_zip_atomically(zip_path: str, sources: list[str], root: str) -> None:

@@ -8,15 +8,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from solace_apache_beam_spark.session import get_spark  # noqa: E402
-from solace_apache_beam_spark.vendor.pbshim import (  # noqa: E402
-    enable_protobuf_shim,
-)
-
-# Activate the pure-python protobuf shim BEFORE any SparkSession exists:
-# transformWithState's python workers import google.protobuf, and worker
-# processes only see the shim if $PYTHONPATH carries it when the JVM
-# (which spawns them) starts. No-op when the real wheel is installed.
-enable_protobuf_shim()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -25,11 +16,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #   SPARK_GRAFT_FUZZ_FULL=1    full hypothesis iteration counts + the
 #                              full oracle-parity sweep (preflight sets)
 #   SPARK_GRAFT_SOAK=1         run the 2-JVM kill-restart soak tier
-#   SPARK_GRAFT_SOAK_POOL=N    soak scenario concurrency (default 4;
-#                              12 runs all 12 scenarios in one wave on
-#                              an idle 32-core VM with SOAK_CPUS=4 —
-#                              the 1.5x thread oversubscription costs
-#                              ~40 s vs a 10-wide wave, still one wave)
+#   SPARK_GRAFT_SOAK_POOL=N    soak scenario concurrency (default 4,
+#                              3 waves; 9 runs all 9 scenarios in one
+#                              wave on an idle 32-core VM with
+#                              SOAK_CPUS=4)
 #   SPARK_GRAFT_SOAK_CPUS=N    local[N] per soak JVM (default 8)
 #   SPARK_GRAFT_FUZZ_SCALE=F   fractional multiplier on hypothesis
 #                              example counts (floor 1; preflight never

@@ -60,6 +60,17 @@ def test_running_counts_accumulate_across_batches(spark, broker, tmp_path):
     assert got["q2"] == (1, 4)
 
 
+def test_payload_nbytes_counts_null_payloads_as_zero():
+    """running_counts' byte total sums UTF-8 bytes over the non-null
+    payloads; a null payload still counts as a message, with 0 bytes."""
+    import pandas as pd
+
+    from solace_apache_beam_spark.streaming.stateful import _payload_nbytes
+
+    assert _payload_nbytes(pd.Series([None, "xy", "\u00e9"])) == 4
+    assert _payload_nbytes(pd.Series([None], dtype=object)) == 0
+
+
 def test_sessionize_emits_on_watermark_close(spark, broker, tmp_path):
     """A session is emitted exactly once, when the watermark (advanced
     by later events) passes last_event + gap."""
@@ -143,6 +154,26 @@ def test_funnel_progress_advances_across_batches(spark, broker, tmp_path):
     out-of-order stages don't advance."""
     from solace_apache_beam_spark.streaming.stateful import funnel_progress
 
+    def start(queue, name, **kw):
+        stream = open_stream(spark, broker, [queue], **kw).select(
+            F.split("payload", ":")[0].alias("user"),
+            F.split("payload", ":")[1].alias("stage_name"),
+            "event_time",
+            "message_id",
+        )
+        return (
+            funnel_progress(stream, ("view", "click", "purchase"), key_col="user")
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / f"cp_{name}"))
+            .start()
+        )
+
+    def stages(name):
+        rows = spark.sql(f"SELECT key, max(stage_reached) s FROM {name} GROUP BY key")
+        return {r.key: r.s for r in rows.collect()}
+
     base_us = 1_700_000_000_000_000
     # payload = "user:stage"; u1 does view,click; u2 starts with click
     fake_broker.publish(
@@ -151,20 +182,7 @@ def test_funnel_progress_advances_across_batches(spark, broker, tmp_path):
         ["u1:view", "u1:click", "u2:click"],
         sender_timestamp_us=[base_us, base_us + 1_000_000, base_us + 2_000_000],
     )
-    stream = open_stream(spark, broker, ["q1"]).select(
-        F.split("payload", ":")[0].alias("user"),
-        F.split("payload", ":")[1].alias("stage_name"),
-        "event_time",
-        "message_id",
-    )
-    q = (
-        funnel_progress(stream, ("view", "click", "purchase"), key_col="user")
-        .writeStream.format("memory")
-        .queryName("funnelp")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "cp_funnel"))
-        .start()
-    )
+    q = start("q1", "funnelp")
     q.processAllAvailable()
     fake_broker.publish(
         broker,
@@ -174,12 +192,26 @@ def test_funnel_progress_advances_across_batches(spark, broker, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    rows = spark.sql(
-        "SELECT key, max(stage_reached) s FROM funnelp GROUP BY key"
-    ).collect()
-    got = {r.key: r.s for r in rows}
+    got = stages("funnelp")
     assert got["u1"] == 3  # view -> click -> purchase across two batches
     assert got["u2"] == 1  # click first didn't count; view later reached stage 1
+
+    # three users, three events a batch: u1 advances across batches,
+    # u2's leading click is skipped, and u3's click at its view's
+    # timestamp counts across the batch boundary (later id)
+    users = ["u1", "u1", "u2", "u1", "u2", "u3", "u3"]
+    names = ["view", "click", "click", "purchase", "view", "view", "click"]
+    secs = [0, 1, 2, 3, 4, 5, 5]
+    fake_broker.publish(
+        broker,
+        "q2",
+        [f"{u}:{n}" for u, n in zip(users, names)],
+        sender_timestamp_us=[base_us + t * 1_000_000 for t in secs],
+    )
+    q = start("q2", "funnelp_three_users", max_records_per_batch=3)
+    q.processAllAvailable()
+    q.stop()
+    assert stages("funnelp_three_users") == {"u1": 3, "u2": 1, "u3": 2}
 
 
 def test_funnel_progress_resumes_from_checkpoint(spark, broker, tmp_path):
@@ -231,36 +263,52 @@ def test_sessionize_splits_gap_within_one_batch(spark, broker, tmp_path):
     cross-batch timeout."""
     base_us = 1_700_000_000_000_000
     hour = 3_600_000_000
-    fake_broker.publish(
-        broker,
-        "q1",
-        ["a", "b", "c", "d"],
-        sender_timestamp_us=[
-            base_us,
-            base_us + 1_000_000,
-            base_us + hour,          # > 30s gap -> new session
-            base_us + hour + 2_000_000,
-        ],
-    )
-    stream = open_stream(spark, broker, ["q1"])
-    q = (
-        sessionize(stream, gap_seconds=30)
-        .writeStream.format("memory")
-        .queryName("sess_split")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "cp_split"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(
-        "SELECT session_start, session_end, n_events FROM sess_split ORDER BY session_start"
-    ).collect()
+    bursts = [base_us, base_us + 1_000_000, base_us + hour, base_us + hour + 2_000_000]
+
+    def closed_sessions(broker_dir, queues, name):
+        stream = open_stream(spark, broker_dir, queues)
+        q = (
+            sessionize(stream, gap_seconds=30)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / f"cp_{name}"))
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        return sorted(
+            tuple(r)
+            for r in spark.sql(
+                "SELECT key, unix_micros(session_start), unix_micros(session_end),"
+                f" n_events FROM {name}"
+            ).collect()
+        )
+
+    # > 30s gap between the pairs -> new session
+    fake_broker.publish(broker, "q1", ["a", "b", "c", "d"], sender_timestamp_us=bursts)
     # the FIRST burst closed in-batch (the second stays open awaiting
     # its timeout, unemitted)
-    assert len(rows) == 1
-    assert rows[0].n_events == 2
-    assert (rows[0].session_end - rows[0].session_start).total_seconds() == 1.0
+    assert closed_sessions(broker, ["q1"], "sess_split") == [
+        ("q1", base_us, base_us + 1_000_000, 2)
+    ]
+
+    # a far-future fifth event on each of two queues closes the second
+    # burst in-batch too; the lone fifth event stays open
+    two_queues = str(tmp_path / "broker_two_queues")
+    for queue in ("q1", "q2"):
+        fake_broker.create_queue(two_queues, queue)
+        fake_broker.publish(
+            two_queues,
+            queue,
+            ["a", "b", "c", "d", "e"],
+            sender_timestamp_us=bursts + [base_us + 2 * hour],
+        )
+    assert closed_sessions(two_queues, ["q1", "q2"], "sess_split_two_queues") == [
+        (key, start, end, 2)
+        for key in ("q1", "q2")
+        for start, end in ((bursts[0], bursts[1]), (bursts[2], bursts[3]))
+    ]
 
 
 def test_funnel_progress_nullable_inputs_match_batch_semantics(spark, tmp_path):

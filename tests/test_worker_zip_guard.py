@@ -90,6 +90,26 @@ _SEMANTICS_SCRIPT = textwrap.dedent(
     importlib.invalidate_caches()
     del sys.modules["c"]
     assert importlib.import_module("c").V == 3, "restored archive not re-read"
+
+    # a zipped package's __path__ gets a second importer on the archive:
+    # one read serves both after a change, none while it is unchanged
+    package = {"a": "V = 1\\n", "p/__init__": "", "p/m": "V = 4\\n"}
+    build(archive, package)
+    importlib.invalidate_caches()
+    assert importlib.import_module("p.m").V == 4
+    on_archive = [
+        f for f in sys.path_importer_cache.values()
+        if isinstance(f, zipimport.zipimporter) and f.archive == archive
+    ]
+    assert len(on_archive) == 2, on_archive
+    build(archive, {**package, "d": ""})
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads == [archive], f"one read per changed archive: {reads}"
+    assert all("d.py" in f._files for f in on_archive)
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads == [], f"unchanged archive re-read: {reads}"
     print("ok")
     """
 )
@@ -98,7 +118,8 @@ _SEMANTICS_SCRIPT = textwrap.dedent(
 def test_zip_guard_semantics(tmp_path):
     """Installed only in a task's worker and before 3.13, idempotent;
     an unchanged archive is read once, a rewritten or replaced one is
-    re-read, a deleted one does not crash and is re-read once restored."""
+    re-read, a deleted one does not crash and is re-read once restored,
+    and importers sharing an archive share its one read."""
     out = subprocess.run(
         [sys.executable, "-c", _SEMANTICS_SCRIPT, str(tmp_path)],
         cwd=REPO_ROOT,
@@ -199,3 +220,28 @@ def test_package_zip_rebuild_is_atomic(tmp_path, monkeypatch):
         assert sorted(zf.namelist()) == ["pkg/a.py", "pkg/b.py", "pkg/c.py"]
     assert os.stat(zip_path).st_ino != inode
     assert sorted(os.listdir(tmp_path)) == [".solace_pkg.zip", "pkg"]
+
+
+def test_package_zip_goes_stale_when_a_module_is_deleted(tmp_path):
+    """Deleting a module makes the zip stale although no remaining source
+    is newer than it; the rebuilt zip lacks the module, and an unchanged
+    tree does not rebuild."""
+    from solace_apache_beam_spark.sources.solace import _refresh_pkg_zip
+
+    pkg = tmp_path / "pkg"
+    (pkg / "sub").mkdir(parents=True)
+    for rel in ("__init__.py", "a.py", "sub/__init__.py", "sub/b.py"):
+        (pkg / rel).write_text("")
+    zip_path = str(tmp_path / ".solace_pkg.zip")
+    assert _refresh_pkg_zip(str(pkg), zip_path)
+    assert not _refresh_pkg_zip(str(pkg), zip_path)
+
+    os.remove(pkg / "sub" / "b.py")
+    assert _refresh_pkg_zip(str(pkg), zip_path)
+    with zipfile.ZipFile(zip_path) as zf:
+        assert sorted(zf.namelist()) == [
+            "pkg/__init__.py",
+            "pkg/a.py",
+            "pkg/sub/__init__.py",
+        ]
+    assert not _refresh_pkg_zip(str(pkg), zip_path)
