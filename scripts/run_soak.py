@@ -456,8 +456,9 @@ def _verify_conservation(run: Run) -> dict:
 
 def _lose(run: Run, log: str, n: int | None = None) -> int:
     """Delete checkpoint-log entry ``cp/<log>/<n>`` (default: the
-    newest) with its checksum sidecar — the entry a crash between its
-    write and its fsync would lose. Returns ``n``."""
+    newest) with its ``.crc`` sidecar, when a checksummed filesystem
+    wrote one — the entry a crash between its write and its fsync
+    would lose. Returns ``n``."""
     d = os.path.join(run.work, "cp", log)
     if n is None:
         n = max(int(f) for f in os.listdir(d) if f.isdigit())

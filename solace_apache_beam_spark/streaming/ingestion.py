@@ -443,8 +443,9 @@ def make_corpus_ingestion_screen(
         t0 = time.perf_counter()
         # release this epoch's caches OFF the epoch's critical path:
         # each DataFrame.unpersist pays a CacheManager plan-matching
-        # walk on the driver (measured 0.4-0.9 s/epoch for the six
-        # frames, round 14) and nothing downstream reads these frames —
+        # walk on the driver (26-83 ms per 10k-doc epoch for the three
+        # below, measured on perfbench ingest_bulk) and nothing
+        # downstream reads these frames —
         # CacheManager is synchronized, so a racing registration from
         # the next epoch at worst waits on the lock, it cannot corrupt
         import threading

@@ -495,3 +495,32 @@ def test_curation_pipeline_no_forced_broadcast_no_nested_loop(spark, sf_dir, que
     plan = _plan(spark, df)
     assert "BroadcastNestedLoopJoin" not in plan
     df.plan_caches.unpersist()
+
+
+def test_column_build_skips_call_site_capture(spark, monkeypatch):
+    """The session builds with ``spark.python.sql.dataFrameDebugging.enabled``
+    off, so a ``functions`` call does not pay PySpark's call-site capture
+    (active-session lookup, origin class lookup, conf read, origin
+    set/clear: 13 py4j round trips for one ``F.col`` with it on). Counted
+    at the py4j socket, with PySpark's per-process cache of the setting
+    re-read from this session."""
+    import threading
+
+    import py4j.clientserver
+    import pyspark.errors.utils
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(pyspark.errors.utils, "_enable_debugging_cache", None)
+    F.col("warm")  # re-reads the setting once
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+    this_thread = threading.current_thread()
+
+    def counting(self, command, *args, **kwargs):
+        if threading.current_thread() is this_thread:
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    F.col("x")
+    assert len(sent) <= 3, sent

@@ -117,11 +117,24 @@ def test_sessionize_emits_on_watermark_close(spark, broker, tmp_path):
 def test_running_counts_resume_from_checkpoint(spark, broker, tmp_path):
     """Stateful operator state survives a stop/restart cycle: the
     restarted query continues counting from the checkpointed state
-    (§5 tier-3 restart contract)."""
+    (§5 tier-3 restart contract). The checkpoint and the sink are
+    written through the raw local filesystem and the FileSystem-based
+    checkpoint manager (plain create + rename, no hidden ``.crc``
+    sidecars, no temp files left), and the restart still resumes
+    exactly."""
     from solace_apache_beam_spark.sinks.warehouse import make_warehouse_appender
 
     cp = str(tmp_path / "cp_resume")
     table = str(tmp_path / "rc_sink")
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), hadoop_conf)
+    assert fs.getClass().getName() == "org.apache.hadoop.fs.RawLocalFileSystem"
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    assert manager.create(jvm.org.apache.hadoop.fs.Path(cp), hadoop_conf).getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
     fake_broker.publish(broker, "q1", ["one", "two"])
 
     def run_once():
@@ -139,6 +152,14 @@ def test_running_counts_resume_from_checkpoint(spark, broker, tmp_path):
     run_once()
     fake_broker.publish(broker, "q1", ["three"])
     run_once()
+    written = [
+        os.path.join(d, f) for root in (cp, table) for d, _, names in os.walk(root) for f in names
+    ]
+    # no Hadoop checksum sidecars (``.<name>.crc``); Spark's own state-file
+    # checksums (``<name>.crc``) stay
+    assert [f for f in written if os.path.basename(f).startswith(".")] == []
+    deltas = [f for f in written if f.endswith(".delta")]
+    assert deltas and all(f + ".crc" in written for f in deltas)
     got = (
         spark.read.parquet(table)
         .groupBy("key")
